@@ -25,4 +25,9 @@ Layout
   pushdown / broadcast / no-redundant-shuffle properties.
 """
 
+from ._zipcache import install as _install_zipcache
+
+# every Python worker that unpickles engine code imports this package
+_install_zipcache()
+
 __version__ = "0.1.0"

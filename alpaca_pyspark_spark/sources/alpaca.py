@@ -302,7 +302,7 @@ class PaginatedRestReader(DataSourceReader):
         part_params.update(
             symbols=partition.symbol,
             start=partition.start.isoformat(),
-            end=partition.end.isoformat(),
+            end=partition.api_end.isoformat(),
             limit=self.params.get("limit", str(DEFAULT_LIMIT)),
         )
         for page in paginate(

@@ -65,11 +65,28 @@ def parse_timeframe(timeframe: str) -> timedelta:
 
 @dataclass
 class SymbolSlicePartition(InputPartition):
-    """One Spark task: one symbol over one half-open time slice."""
+    """One Spark task: one symbol over the half-open slice
+    ``[start, end)``, or over the closed ``[start, end]`` when
+    ``closed`` (the job's last slice, which keeps the caller's
+    inclusive end)."""
 
     symbol: str
     start: datetime
     end: datetime
+    closed: bool = False
+
+    @property
+    def api_end(self) -> datetime:
+        """The API's inclusive ``end`` for this slice: a record stamped
+        exactly on a boundary is fetched by the later slice only."""
+        return self.end if self.closed else inclusive_end(self.end)
+
+
+def inclusive_end(end: datetime) -> datetime:
+    """The API's ``end`` is inclusive and timestamps are
+    microsecond-granular, so a half-open slice ``[start, end)`` asks
+    for ``end - 1µs``."""
+    return end - timedelta(microseconds=1)
 
 
 def adaptive_slice_count(
@@ -96,7 +113,10 @@ def plan_partitions(
     """Cartesian grid of symbols × equal time slices.
 
     With a ``timeframe`` (bars) the slice count is volume-adaptive;
-    otherwise fixed 1-day slices (min 1)."""
+    otherwise fixed 1-day slices (min 1).  Per symbol the slices tile
+    the caller's inclusive ``[start, end]`` exactly once: every slice
+    is half-open except the last, which is ``closed``; the reader
+    sends each slice's ``api_end`` as the API's inclusive ``end``."""
     total = end - start
     if total < timedelta(0):
         raise ValueError("start must be <= end")
@@ -110,5 +130,5 @@ def plan_partitions(
         for i in range(n):
             s = start + i * slice_td
             e = end if i == n - 1 else start + (i + 1) * slice_td
-            out.append(SymbolSlicePartition(symbol, s, e))
+            out.append(SymbolSlicePartition(symbol, s, e, closed=i == n - 1))
     return out

@@ -25,7 +25,7 @@ from pyspark.sql.datasource import (
 
 from ..sources.alpaca import TRADES_TABLE, stock_trades_specs
 from ..sources.http import make_fetcher, paginate
-from ..sources.partitioning import DEFAULT_LIMIT
+from ..sources.partitioning import DEFAULT_LIMIT, inclusive_end
 from ..sources.spec import (
     EndpointConfig,
     ParamSpec,
@@ -78,7 +78,7 @@ class TradesStreamReader(SimpleDataSourceStreamReader):
         # by both adjacent ones.  dedup_stream covers residual replays.
         base.update(
             start=lo.isoformat(),
-            end=(hi - timedelta(microseconds=1)).isoformat(),
+            end=inclusive_end(hi).isoformat(),
             limit=self.params.get("limit", str(DEFAULT_LIMIT)),
         )
         # absent/empty symbols = an EMPTY universe: fetch nothing (the

@@ -208,20 +208,27 @@ def test_adaptive_three_tiers_engage_and_agree(spark, monkeypatch):
             rows.append((rid, k, t, rng.randint(-9, 9)))
             rid += 1
     rows += [(rid, None, base + 5, 3), (rid + 1, 2, None, 4), (rid + 2, 1, None, None)]
-    df = spark.createDataFrame(
-        rows, "rid long, user_id long, us long, value long"
-    )
-    got = rw.trailing_count_sums_adaptive(
-        df,
-        key="user_id",
-        order_us="us",
-        window_us=W,
-        row_id="rid",
-        sums={"sum_w": F.col("value")},
-        count_alias="n_w",
-    )
-    assert _rows(got) == _rows(_plain_ref(df))
-    # the dispatch actually split: stats must flag keys 1 and 2, and
-    # only key 1 extreme (key 2's span spreads it under the floor)
-    stats = {k: (n, s) for k, n, s in rw._hot_key_stats(df, "user_id", "us", 50)}
-    assert set(stats) == {1, 2}
+    # the hot-key floor is max(50, 2·rows/shuffle partitions); pin the
+    # partitions so key 2's 201 rows clear it on any core count
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        df = spark.createDataFrame(
+            rows, "rid long, user_id long, us long, value long"
+        )
+        got = rw.trailing_count_sums_adaptive(
+            df,
+            key="user_id",
+            order_us="us",
+            window_us=W,
+            row_id="rid",
+            sums={"sum_w": F.col("value")},
+            count_alias="n_w",
+        )
+        assert _rows(got) == _rows(_plain_ref(df))
+        # the dispatch actually split: stats must flag keys 1 and 2, and
+        # only key 1 extreme (key 2's span spreads it under the floor)
+        stats = {k: (n, s) for k, n, s in rw._hot_key_stats(df, "user_id", "us", 50)}
+        assert set(stats) == {1, 2}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import threading
+from collections import Counter
 from datetime import datetime, timedelta, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -223,6 +224,96 @@ def test_plan_partitions_grid():
     # contiguous, non-overlapping
     for a, b in zip(aapl, aapl[1:]):
         assert a.end == b.start
+
+
+def _tape_fetcher(data_key, tape):
+    """A fake page fetcher over ``tape`` ({symbol: [record]}, sorted by
+    ``t``) with the API's semantics: inclusive ``start``/``end``,
+    ``limit`` records per page, an offset as the page token."""
+
+    def at(record):
+        return datetime.fromisoformat(record["t"].replace("Z", "+00:00"))
+
+    def fetch(params):
+        lo = datetime.fromisoformat(params["start"])
+        hi = datetime.fromisoformat(params["end"])
+        sym = params["symbols"]
+        hits = [r for r in tape.get(sym, []) if lo <= at(r) <= hi]
+        off, limit = int(params.get("page_token", 0)), int(params["limit"])
+        nxt = off + limit
+        return {
+            data_key: {sym: hits[off:nxt]},
+            "next_page_token": str(nxt) if nxt < len(hits) else None,
+        }
+
+    return fetch
+
+
+def _read_all(source_cls, opts, data_key, tape, monkeypatch):
+    """Plan ``opts`` through the source's reader and read every
+    partition against ``tape``; returns (partitions, rows)."""
+    from alpaca_pyspark_spark.sources import alpaca as alpaca_mod
+
+    fetch = _tape_fetcher(data_key, tape)
+    monkeypatch.setattr(alpaca_mod, "make_fetcher", lambda *a, **k: fetch)
+    reader = source_cls({**CREDS, **opts}).reader(None)
+    parts = reader.partitions()
+    rows = [r for p in parts for b in reader.read(p) for r in b.to_pylist()]
+    return parts, rows
+
+
+def _iso_z(dt):
+    return dt.strftime("%Y-%m-%dT%H:%M:%SZ")
+
+
+def test_bars_grid_serves_each_tape_bar_once(monkeypatch):
+    """Served vs tape: bars stamped exactly on interior slice
+    boundaries and on the job's inclusive ends land exactly once."""
+    from alpaca_pyspark_spark.sources.alpaca import StockBarsDataSource
+
+    start = datetime(2021, 1, 4, 14, 0, tzinfo=timezone.utc)
+    end = start + timedelta(hours=3)
+    stamps = [start + timedelta(minutes=3 * k) for k in range(61)]  # start..end
+    tape = {
+        sym: [
+            {"t": _iso_z(t), "o": 1.0, "h": 2.0, "l": 0.5, "c": 1.5,
+             "v": k, "n": 1, "vw": 1.2}
+            for k, t in enumerate(stamps)
+        ]
+        for sym in ("AAPL", "MSFT")
+    }
+    opts = {"symbols": "AAPL,MSFT", "timeframe": "1Min", "limit": "10",
+            "start": start.isoformat(), "end": end.isoformat()}
+    parts, rows = _read_all(StockBarsDataSource, opts, "bars", tape, monkeypatch)
+    # 180 min / (10 rows x 5 pages) -> 4 slices per symbol, and the
+    # tape puts a bar on each interior boundary
+    assert len(parts) == 8
+    boundaries = {p.start for p in parts} - {start}
+    assert len(boundaries) == 3 and boundaries <= set(stamps)
+    got = Counter((r["symbol"], r["time"]) for r in rows)
+    want = Counter((sym, t) for sym in tape for t in stamps)
+    assert got == want
+
+
+def test_trades_day_grid_serves_each_tape_trade_once(monkeypatch):
+    """Served vs tape over the 1-day non-bars grid: trades at midnight
+    boundaries and at the job's inclusive end land exactly once."""
+    from alpaca_pyspark_spark.sources.alpaca import StockTradesDataSource
+
+    start = datetime(2021, 1, 4, tzinfo=timezone.utc)
+    end = start + timedelta(days=3)
+    stamps = [start + timedelta(hours=6 * k) for k in range(13)]  # start..end
+    tape = {
+        "AAPL": [
+            {"t": _iso_z(t), "x": "V", "p": 1.0, "s": 1, "c": [], "i": k, "z": "C"}
+            for k, t in enumerate(stamps)
+        ]
+    }
+    opts = {"symbols": "AAPL", "limit": "2",
+            "start": start.isoformat(), "end": end.isoformat()}
+    parts, rows = _read_all(StockTradesDataSource, opts, "trades", tape, monkeypatch)
+    assert len(parts) == 3
+    assert Counter(r["id"] for r in rows) == Counter(range(len(stamps)))
 
 
 def test_pagination_follows_tokens():
